@@ -4624,66 +4624,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # r6 item 1): tools/window_order.py derives it from the
     # CORRECTNESS_r* history — (1) brand-new gates needing first-ever
     # driver rows, (2) gates whose code or oracle changed this round,
-    # (3) everything else oldest newest-green-driver-row first. The r12
-    # head: the 13 new r12 gates first (appended to ROUND_HEAD as they
-    # landed) plus the changed hits_scores, then the stalest driver rows
-    # (the r7-evidence cohort, bloom_prune onward) fill the remaining
-    # window slots.
-    # Regenerate after gate changes with:
-    #   python3 tools/window_order.py --new <gates> --changed <gates>
+    # (3) everything else oldest newest-green-driver-row first. The
+    # current head has no new or changed gates, so the whole window is
+    # the stalest driver rows.
+    # Regenerate after gate changes (update ROUND_HEAD) with:
+    #   python3 tools/regen_queries_dict.py
     # tests/test_entry.py::test_window_order_matches_tool pins dict order
     # to the tool's output so the comment cannot drift from reality.
     return {
-        "phash_dihedral": q_phash_dihedral,
-        "pyds_pushdown": q_pyds_pushdown,
-        "stream_cms": q_stream_cms,
-        "stream_hll": q_stream_hll,
-        "stream_kmv": q_stream_kmv,
-        "substring_dup": q_substring_dup,
-        "token_entropy": q_token_entropy,
-        "triangle_count": q_triangle_count,
-        "upsert_customers": q_upsert_customers,
-        "winsorize": q_winsorize,
-        "asof_purchase": q_asof_purchase,
-        "bpe_fertility": q_bpe_fertility,
-        "conditional_aggs": q_conditional_aggs,
-        "dedup_incremental": q_dedup_incremental,
-        "denorm_flat": q_denorm_flat,
-        "disjunctive_revenue": q_disjunctive_revenue,
-        "doc_chunks": q_doc_chunks,
-        "embed_ivf_learned": q_embed_ivf_learned,
-        "embed_ivf_topk": q_embed_ivf_topk,
-        "embed_lsh_topk": q_embed_lsh_topk,
-        "entity_resolution": q_entity_resolution,
-        "event_multi_pattern": q_event_multi_pattern,
-        "events_hourly": q_events_hourly,
-        "except_segments": q_except_segments,
-        "forecast_revenue": q_forecast_revenue,
-        "heavy_suppliers": q_heavy_suppliers,
-        "heavy_tokens": q_heavy_tokens,
-        "idle_customers": q_idle_customers,
-        "important_parts": q_important_parts,
-        "kcore_parts": q_kcore_parts,
-        "lm_tail_trained": q_lm_tail_trained,
-        "lpa_communities": q_lpa_communities,
-        "min_price_supplier": q_min_price_supplier,
-        "namespace_project": q_namespace_project,
-        "nest_chunked": q_nest_chunked,
-        "nest_orders": q_nest_orders,
-        "ngram_containment": q_ngram_containment,
-        "ngram_prefix_jaccard": q_ngram_prefix_jaccard,
-        "orc_roundtrip": q_orc_roundtrip,
-        "order_count_histogram": q_order_count_histogram,
-        "orders_above_customer_avg": q_orders_above_customer_avg,
-        "pack_sequences": q_pack_sequences,
-        "parts_never_ordered": q_parts_never_ordered,
-        "q1_pricing_summary": q1_pricing_summary,
-        "q3_top_revenue": q3_top_revenue,
-        "q5_region_revenue": q5_region_revenue,
-        "quality_filter": q_quality_filter,
-        "quantity_percentiles": q_quantity_percentiles,
-        "range_join_bands": q_range_join_bands,
-        "returned_revenue_topn": q_returned_revenue_topn,
         "robust_outliers": q_robust_outliers,
         "rollup_revenue": q_rollup_revenue,
         "schema_projection": q_schema_projection,
@@ -4885,6 +4833,56 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "video_dihedral": q_video_dihedral,
         "video_frame_lookup": q_video_frame_lookup,
         "video_neardup": q_video_neardup,
+        "asof_purchase": q_asof_purchase,
+        "bpe_fertility": q_bpe_fertility,
+        "conditional_aggs": q_conditional_aggs,
+        "dedup_incremental": q_dedup_incremental,
+        "denorm_flat": q_denorm_flat,
+        "disjunctive_revenue": q_disjunctive_revenue,
+        "doc_chunks": q_doc_chunks,
+        "embed_ivf_learned": q_embed_ivf_learned,
+        "embed_ivf_topk": q_embed_ivf_topk,
+        "embed_lsh_topk": q_embed_lsh_topk,
+        "entity_resolution": q_entity_resolution,
+        "event_multi_pattern": q_event_multi_pattern,
+        "events_hourly": q_events_hourly,
+        "except_segments": q_except_segments,
+        "forecast_revenue": q_forecast_revenue,
+        "heavy_suppliers": q_heavy_suppliers,
+        "heavy_tokens": q_heavy_tokens,
+        "idle_customers": q_idle_customers,
+        "important_parts": q_important_parts,
+        "kcore_parts": q_kcore_parts,
+        "lm_tail_trained": q_lm_tail_trained,
+        "lpa_communities": q_lpa_communities,
+        "min_price_supplier": q_min_price_supplier,
+        "namespace_project": q_namespace_project,
+        "nest_chunked": q_nest_chunked,
+        "nest_orders": q_nest_orders,
+        "ngram_containment": q_ngram_containment,
+        "ngram_prefix_jaccard": q_ngram_prefix_jaccard,
+        "orc_roundtrip": q_orc_roundtrip,
+        "order_count_histogram": q_order_count_histogram,
+        "orders_above_customer_avg": q_orders_above_customer_avg,
+        "pack_sequences": q_pack_sequences,
+        "parts_never_ordered": q_parts_never_ordered,
+        "phash_dihedral": q_phash_dihedral,
+        "pyds_pushdown": q_pyds_pushdown,
+        "q1_pricing_summary": q1_pricing_summary,
+        "q3_top_revenue": q3_top_revenue,
+        "q5_region_revenue": q5_region_revenue,
+        "quality_filter": q_quality_filter,
+        "quantity_percentiles": q_quantity_percentiles,
+        "range_join_bands": q_range_join_bands,
+        "returned_revenue_topn": q_returned_revenue_topn,
+        "stream_cms": q_stream_cms,
+        "stream_hll": q_stream_hll,
+        "stream_kmv": q_stream_kmv,
+        "substring_dup": q_substring_dup,
+        "token_entropy": q_token_entropy,
+        "triangle_count": q_triangle_count,
+        "upsert_customers": q_upsert_customers,
+        "winsorize": q_winsorize,
     }
 
 

@@ -55,12 +55,17 @@ def ckpt(df: DataFrame) -> DataFrame:
     tools all rebuild plans per run). Usage: ``df.transform(ckpt)``.
     """
     out = df.localCheckpoint()
-    try:
-        rdd_id = int(out._jdf.queryExecution().analyzed().rdd().id())
-        _CKPT.append((out.sparkSession.sparkContext, rdd_id))
-    except Exception:
-        pass  # unexpected plan shape: leave the blocks to ContextCleaner
+    _CKPT.append((out.sparkSession.sparkContext, _ckpt_rdd_id(out)))
     return out
+
+
+def _ckpt_rdd_id(df: DataFrame) -> int:
+    # a checkpointed frame's analyzed plan is a LogicalRDD leaf
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise ValueError("not a checkpointed frame: analyzed plan root is "
+                         f"{plan.nodeName()}, not LogicalRDD")
+    return int(plan.rdd().id())
 
 
 def hot_ckpt(df: DataFrame) -> DataFrame:
@@ -92,14 +97,19 @@ def drop_ckpt(df: DataFrame) -> None:
     materialized, so loops drop the previous frame right after the new
     checkpoint's action completes. Dropping truncated-lineage data is
     irrecoverable — only call on frames that will never be read again.
+
+    Raises ValueError for a frame :func:`ckpt` never returned (a
+    projection OF a checkpointed frame, or one already dropped or
+    released): freeing nothing there silently let loops hold every
+    round's blocks until release_pinned().
     """
-    try:
-        rdd_id = int(df._jdf.queryExecution().analyzed().rdd().id())
-        sc = df.sparkSession.sparkContext
-        sc._jsc.sc().unpersistRDD(rdd_id, False)
-        _CKPT[:] = [(s, i) for (s, i) in _CKPT if i != rdd_id]
-    except Exception:
-        pass  # not a checkpointed frame / session gone — nothing to free
+    sc = df.sparkSession.sparkContext
+    entry = (sc, _ckpt_rdd_id(df))
+    if entry not in _CKPT:
+        raise ValueError("drop_ckpt: frame is not a tracked checkpoint "
+                         "(pass the frame ckpt() returned)")
+    _CKPT.remove(entry)
+    sc._jsc.sc().unpersistRDD(entry[1], False)
 
 
 def release_pinned() -> int:

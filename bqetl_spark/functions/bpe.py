@@ -124,6 +124,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 8, text_col: str = "text",
             break
         l, r, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         merges.append((k, l, r, l + r, cnt))
+        prev = vocab  # the checkpointed frame ckpt() returned
         vocab = vocab.select(
             "word", "freq",
             F.replace(F.col("s"), F.lit(f" {l}  {r} "),
@@ -132,7 +133,6 @@ def bpe_train(docs: DataFrame, n_merges: int = 8, text_col: str = "text",
             # cut lineage eagerly: O(1) PLAN size per round, not just
             # O(1) re-execution (vocab-sized job, r12); the superseded
             # round's checkpoint blocks are freed at once (r13, §5)
-            prev = vocab
             vocab = vocab.transform(ckpt)
             drop_ckpt(prev)
     return spark.createDataFrame(merges, MERGE_SCHEMA)

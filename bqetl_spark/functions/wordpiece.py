@@ -140,6 +140,7 @@ def wordpiece_train(docs: DataFrame, n_merges: int = 8,
         merged = l + _strip_cont(r)
         merges.append((k, l, r, merged, int(best[0]["cnt"]),
                        int(best[0]["score"])))
+        prev = vocab  # the checkpointed frame ckpt() returned
         vocab = vocab.select(
             "word", "freq",
             F.replace(F.col("s"), F.lit(f" {l}  {r} "),
@@ -149,7 +150,6 @@ def wordpiece_train(docs: DataFrame, n_merges: int = 8,
             # O(1) re-execution (vocab-sized job, r12); the superseded
             # round's blocks (and this round's symbol-count table, whose
             # last reader was the score collect) are freed at once (r13)
-            prev = vocab
             vocab = vocab.transform(ckpt)
             drop_ckpt(prev)
             drop_ckpt(symcnt)

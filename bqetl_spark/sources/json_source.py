@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bqetl_spark.sources.inferred import inferred_schema
+
 
 def table_path(bucket: str, name: str) -> str:
     # Reference: path = bucket + "/" + name + ".json"
@@ -73,11 +75,11 @@ def load_table_from_text(spark: SparkSession, lines: DataFrame | str, name: str,
     may surface them — callers projecting through a declared schema drop them.
     """
     if isinstance(lines, str):
-        reader = spark.read
-        if schema is not None:
-            df = reader.json(lines, schema=schema)
-        else:
-            df = reader.option("primitivesAsString", "false").json(lines)
+        if schema is None:
+            # inferred once per session while the file is unchanged
+            schema = inferred_schema(spark, "json", lines,
+                                     {"primitivesAsString": "false"})
+        df = spark.read.json(lines, schema=schema)
     else:
         str_col = lines.columns[0]
         if schema is not None:

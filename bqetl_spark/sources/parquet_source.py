@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
+from bqetl_spark.sources.inferred import inferred_schema
 from bqetl_spark.sources.json_source import namespace_columns
 
 STAR_TABLES = (
@@ -38,16 +39,19 @@ def ensure_ltz(df: DataFrame) -> DataFrame:
 def _ltz_scan_conf(spark: SparkSession) -> None:
     # scan-level fix: read tz-less parquet timestamps as LTZ directly so no
     # extra Project node lands between the scan and downstream pushdown
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass  # older Spark without the conf — ensure_ltz covers it
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    # schema from the session memo: no footer job when the files are
+    # unchanged since this session last inferred them
+    return spark.read.schema(inferred_schema(spark, "parquet", path)).parquet(path)
 
 
 def load_parquet_table(spark: SparkSession, sf_dir: str, name: str,
                        namespace: bool = False) -> DataFrame:
     _ltz_scan_conf(spark)
-    df = ensure_ltz(spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet"))
+    df = ensure_ltz(_read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet"))
     return namespace_columns(df, name) if namespace else df
 
 
@@ -64,7 +68,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     way, so the two engines agree."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     _ltz_scan_conf(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
+    df = _read_parquet(spark, f"{sf_dir.rstrip('/')}/events.parquet")
     if dict(df.dtypes).get("ts") == "bigint":
         # integer division: `/` is double division, and a nanosecond epoch
         # (~1.7e18) exceeds double's 2^53 integer range → off-by-1µs rows

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bqetl_spark.sources.inferred import inferred_schema
 from bqetl_spark.streaming.stateutil import replace_parquet_state
 
 
@@ -38,11 +39,8 @@ def _read_events_stream(spark: SparkSession, events_dir: str,
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # scan-level LTZ: Spark 4 infers tz-less parquet timestamps as
     # TIMESTAMP_NTZ, which watermarks reject — read them as LTZ instead
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    schema = spark.read.parquet(events_dir).schema
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    schema = inferred_schema(spark, "parquet", events_dir)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bqetl_spark.sources.inferred import inferred_schema
+
 STATE_SCHEMA = T.StructType([
     T.StructField("n", T.LongType()),
     T.StructField("total", T.DoubleType()),
@@ -36,12 +38,9 @@ def stream_user_totals(spark: SparkSession, events_dir: str) -> DataFrame:
     bounded replay. Emits one snapshot row per user per micro-batch.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        # Spark 4: read tz-less parquet timestamps as LTZ (watermark-friendly)
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    schema = spark.read.parquet(events_dir).schema
+    # Spark 4: read tz-less parquet timestamps as LTZ (watermark-friendly)
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    schema = inferred_schema(spark, "parquet", events_dir)
     import os
 
     if events_dir.endswith(".parquet") and os.path.isfile(events_dir):
@@ -101,11 +100,8 @@ def stream_session_counts(spark: SparkSession, events_dir: str,
     event-time session window), which trades bounded per-key state for it;
     this operator deliberately keeps the O(1) state."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    schema = spark.read.parquet(events_dir).schema
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    schema = inferred_schema(spark, "parquet", events_dir)
     import os
 
     if events_dir.endswith(".parquet") and os.path.isfile(events_dir):

@@ -50,3 +50,47 @@ def test_release_is_idempotent_and_operator_reusable(spark):
     n2 = ngram_jaccard_pairs(docs).count()
     release_pinned()
     assert n1 == n2
+
+
+def test_merge_trainers_hold_bounded_checkpoints(spark):
+    """bpe_train / wordpiece_train checkpoint their vocab every round and
+    drop the superseded round's blocks: the persistent-RDD count a
+    trainer leaves before release_pinned() does not grow with the
+    number of merge rounds, and release_pinned() frees all of it."""
+    from bqetl_spark.functions.bpe import bpe_train
+    from bqetl_spark.functions.wordpiece import wordpiece_train
+
+    docs = spark.createDataFrame(
+        [(1, " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6
+                      + ["widest"] * 3))], "doc_id long, text string")
+    for train in (bpe_train, wordpiece_train):
+        held = []
+        for n_merges in (2, 6):
+            release_pinned()
+            base = _n_persistent(spark)
+            assert train(docs, n_merges=n_merges).count() == n_merges
+            held.append(_n_persistent(spark) - base)
+            release_pinned()
+            assert _n_persistent(spark) == base
+        assert held[0] == held[1] > 0, (train.__name__, held)
+
+
+def test_drop_ckpt_rejects_untracked_frames(spark):
+    """drop_ckpt frees exactly the frame ckpt() returned; anything else
+    (a projection of it, a frame already dropped) raises instead of
+    freeing nothing."""
+    import pytest
+
+    from bqetl_spark.caching import ckpt, drop_ckpt
+
+    release_pinned()
+    base = _n_persistent(spark)
+    ck = spark.range(10).transform(ckpt)
+    assert _n_persistent(spark) == base + 1
+    with pytest.raises(ValueError):
+        drop_ckpt(ck.select("id"))
+    drop_ckpt(ck)
+    assert _n_persistent(spark) == base
+    with pytest.raises(ValueError):
+        drop_ckpt(ck)
+    assert release_pinned() == 0

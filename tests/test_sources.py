@@ -1,4 +1,6 @@
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bqetl_spark.sources.json_source import load_table_from_text, load_text, namespace_columns
 
@@ -246,3 +248,120 @@ def test_pyds_pushdown_unsupported_filter_returned(spark, tmp_path):
     df = (spark.read.format("bqetl_ndjson").schema(schema).load(str(d))
           .where(F.col("ok") & F.col("s").startswith("ab")))
     assert sorted(r["id"] for r in df.collect()) == [1]
+
+
+# ---- session schema memo (sources/inferred.py) ----------------------------
+
+def _n_jobs(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore().jobsList(None).size()
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_memo_second_parquet_read_fires_no_job(spark, tmp_path):
+    from bqetl_spark.sources.parquet_source import load_parquet_table
+
+    spark.range(20).selectExpr("id", "cast(id * 2 as string) AS s") \
+        .write.parquet(str(tmp_path / "t.parquet"))
+    n0 = _n_jobs(spark)
+    first = load_parquet_table(spark, str(tmp_path), "t")
+    n1 = _n_jobs(spark)
+    again = load_parquet_table(spark, str(tmp_path), "t")
+    assert n1 - n0 == 1  # the one inference job
+    assert _n_jobs(spark) == n1
+    assert again.schema == first.schema
+    assert _rows(again) == _rows(first)
+
+
+def test_memo_second_json_read_fires_no_job(spark, mb_bucket):
+    from bqetl_spark.sources.json_source import load_table
+
+    first = load_table(spark, mb_bucket, "recording", key_name="id")
+    n1 = _n_jobs(spark)
+    again = load_table(spark, mb_bucket, "recording", key_name="id")
+    assert _n_jobs(spark) == n1
+    assert again.schema == first.schema
+    assert _rows(again) == _rows(first)
+
+
+def test_memo_parquet_overwrite_with_new_schema(spark, tmp_path):
+    from bqetl_spark.sources.parquet_source import load_parquet_table
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).selectExpr("id AS a").write.parquet(path)
+    assert load_parquet_table(spark, str(tmp_path), "t").columns == ["a"]
+    spark.range(5).selectExpr("id AS b", "'x' AS c") \
+        .write.mode("overwrite").parquet(path)
+    df = load_parquet_table(spark, str(tmp_path), "t")
+    assert df.columns == ["b", "c"]
+    assert _rows(df) == [(i, "x") for i in range(5)]
+
+
+def test_memo_ndjson_same_name_rewrite(spark, tmp_path):
+    from bqetl_spark.sources.json_source import load_table
+
+    p = tmp_path / "t.json"
+    p.write_text('{"id": 1}\n{"id": 2}\n')
+    assert load_table(spark, str(tmp_path), "t").columns == ["t_id"]
+    p.write_text('{"id": 1, "name": "x"}\n{"id": 2, "name": "y"}\n')
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["t_id", "t_name"]
+    assert _rows(df) == [(1, "x"), (2, "y")]
+
+
+def test_memo_new_session_starts_empty(spark, tmp_path):
+    from bqetl_spark.sources.parquet_source import load_parquet_table
+
+    spark.range(5).write.parquet(str(tmp_path / "t.parquet"))
+    load_parquet_table(spark, str(tmp_path), "t")
+    other = spark.newSession()
+    n0 = _n_jobs(spark)
+    load_parquet_table(other, str(tmp_path), "t")
+    assert _n_jobs(spark) - n0 == 1  # inferred afresh in the new session
+    n1 = _n_jobs(spark)
+    load_parquet_table(spark, str(tmp_path), "t")
+    assert _n_jobs(spark) == n1  # the first session's entry is untouched
+
+
+def test_memo_keys_on_type_confs(spark, tmp_path):
+    """The confs that change inferred types are part of the key: a flip
+    infers again and yields the type uncached inference would."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from bqetl_spark.sources.inferred import inferred_schema
+    from bqetl_spark.sources.parquet_source import load_events
+
+    nanos = 1_700_000_000_123_456_789
+    pq.write_table(pa.table({
+        "event_id": [1],
+        "ts": pa.array([nanos], pa.timestamp("ns")),
+        "us": pa.array([nanos // 1000], pa.timestamp("us"))}),
+        str(tmp_path / "events.parquet"))
+    path = str(tmp_path / "events.parquet")
+    nanos_conf = "spark.sql.legacy.parquet.nanosAsLong"
+    ntz_conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    saved = {c: spark.conf.get(c) for c in (nanos_conf, ntz_conf)}
+    try:
+        events = load_events(spark, str(tmp_path))  # sets both confs
+        assert dict(events.dtypes)["ts"] == "timestamp"
+        assert events.first()["ts"].microsecond == 123456
+        schema = inferred_schema(spark, "parquet", path)
+        assert schema["ts"].dataType == T.LongType()
+        assert schema["us"].dataType == T.TimestampType()
+        spark.conf.set(nanos_conf, "false")
+        # Spark rejects TIMESTAMP(NANOS) without nanosAsLong
+        with pytest.raises(AnalysisException):
+            inferred_schema(spark, "parquet", path)
+        spark.conf.set(nanos_conf, "true")
+        spark.conf.set(ntz_conf, "true")
+        assert inferred_schema(spark, "parquet", path)["us"].dataType \
+            == T.TimestampNTZType()
+    finally:
+        for c, v in saved.items():
+            spark.conf.set(c, v)

@@ -38,14 +38,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # queries() dict order to compute_order(..., **ROUND_HEAD), so a stale
 # constant fails the suite instead of silently drifting.
 ROUND_HEAD = {
-    # r13 head (optimization round — no new gates). phash_dihedral is
-    # the one gate whose ORACLE changed this round: the r12 driver red
-    # (HUGEINT output column → float64 precision loss under the driver's
-    # fetch path) is fixed by casting the bit-pack sums to BIGINT; it is
-    # also auto-new (never driver-green), so it stays at the window head
-    # for re-evaluation either way.
+    # r14 head (optimization round — no new gates, no gate code or
+    # oracle changed). phash_dihedral, r13's one changed gate, has its
+    # green driver row in CORRECTNESS_r13.json, so it rejoins the
+    # staleness order.
     "new_first": [],
-    "changed": ["phash_dihedral"],
+    "changed": [],
 }
 
 
