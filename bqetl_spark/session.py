@@ -40,6 +40,19 @@ _DEFAULTS = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.ui.enabled": "false",
     "spark.driver.memory": "48g",
+    # PySpark 4's DataFrame debugging wraps F.col, every Column operator
+    # and alias in a call-site capture: ~10 extra Py4J commands per call
+    # (active-session lookup, a conf get, PySparkCurrentOrigin set/clear)
+    # plus a stack walk that retries `import ipykernel` each time (a failed
+    # module search when it is not installed). Measured on a 4-vCPU box
+    # (PLANS.md): F.col 13 -> 3 commands (~1.0 -> 0.25 ms), a reference-ETL
+    # benchmark pass ~12k -> ~4k commands, its traced driver-idle time
+    # 3.4 -> 2.1 s. Only the Python file:line in a runtime error's
+    # "DataFrame context" is lost; the error class and message remain.
+    # PySpark caches the flag process-wide on first use, so to get call
+    # sites back pass extra_conf={"spark.python.sql.dataFrameDebugging
+    # .enabled": "true"} to the process's FIRST get_spark call.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

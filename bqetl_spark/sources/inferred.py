@@ -66,7 +66,9 @@ def _is_local(path: str) -> bool:
             and os.path.exists(path))
 
 
-def _signature(root: str) -> tuple:
+def file_signature(root: str) -> tuple:
+    """Sorted (relative path, size, mtime_ns) of every file under ``root``
+    (or of ``root`` itself when it is a file)."""
     if os.path.isfile(root):
         st = os.stat(root)
         return (("", st.st_size, st.st_mtime_ns),)
@@ -93,7 +95,7 @@ def inferred_schema(spark: SparkSession, fmt: str, path: str,
         return infer()
     key = (fmt, os.path.abspath(path), tuple(sorted(options.items())),
            tuple(spark.conf.get(c) for c in _TYPE_CONFS[fmt]))
-    sig = _signature(path)
+    sig = file_signature(path)
     with _LOCK:
         hit = _MEMO.get(spark, {}).get(key)
     if hit is not None and hit[0] == sig:

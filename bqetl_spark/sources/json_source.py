@@ -43,9 +43,9 @@ def namespace_columns(df: DataFrame, name: str) -> DataFrame:
 
     The reference namespaces at insertion time (MusicBrainzDataObject.java:73-76)
     to avoid collisions after joins; here it is a pure projection the optimizer
-    folds into the scan.
+    folds into the scan. ``toDF`` renames every column in one JVM call.
     """
-    return df.select([F.col(c).alias(f"{name}_{c}") for c in df.columns])
+    return df.toDF(*[f"{name}_{c}" for c in df.columns])
 
 
 def keyed(df: DataFrame, name: str, key_name: str) -> DataFrame:

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bqetl_spark.sources.inferred import inferred_schema
-from bqetl_spark.streaming.stateutil import replace_parquet_state
+from bqetl_spark.streaming.stateutil import ParquetState
 
 
 def stream_dedup_events(spark: SparkSession, events_dir: str,
@@ -146,13 +146,10 @@ def stream_upsert_user_totals(spark: SparkSession, events_dir: str,
               .groupBy("user_id")
               .agg(F.count("*").alias("n_events")))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
-        # explicit existence check — see stream_kmv_user_distinct's sink
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+    def sink(bdf: DataFrame, batch_id: int) -> None:
+        base = state.read(bdf.sparkSession)
         if base is None:
             out = bdf
         else:
@@ -161,7 +158,7 @@ def stream_upsert_user_totals(spark: SparkSession, events_dir: str,
             out = upsert(base, bdf, "user_id")
         # parquet emulation of a transactional target: write-new-then-swap
         # is merge_into's job for real table formats (operators/merge.py)
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("update")
      .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -197,21 +194,14 @@ def stream_kmv_user_distinct(spark: SparkSession, events_dir: str,
     stream = (_read_events_stream(spark, events_dir, max_files_per_trigger)
               .select("event_type", "user_id"))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
+    def sink(bdf: DataFrame, batch_id: int) -> None:
         batch_sketch = kmv_sketch(bdf, "user_id", "event_type", k)
-        # explicit existence check, NOT try/except-Exception: a corrupt or
-        # transiently unreadable sketch must FAIL the batch, not silently
-        # restart accumulation from scratch — a reset sketch produces a
-        # plausible-but-wrong estimate nothing downstream would notice
-        # (code-review r6 finding)
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+        base = state.read(bdf.sparkSession)
         out = (batch_sketch if base is None
                else kmv_merge(base, batch_sketch, k=k))
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("append")
      .foreachBatch(sink)
@@ -269,19 +259,14 @@ def stream_hll_user_distinct(spark: SparkSession, events_dir: str,
     stream = (_read_events_stream(spark, events_dir, max_files_per_trigger)
               .select("event_type", "user_id"))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
+    def sink(bdf: DataFrame, batch_id: int) -> None:
         batch_sketch = hll_sketch(bdf, "user_id", "event_type")
-        # explicit existence check, NOT try/except — a corrupt sketch
-        # must fail the batch, not silently restart accumulation
-        # (same code-review r6 finding as the KMV sink)
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+        base = state.read(bdf.sparkSession)
         out = (batch_sketch if base is None
                else hll_merge(base, batch_sketch))
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("append")
      .foreachBatch(sink)
@@ -312,16 +297,14 @@ def stream_cms_user_counts(spark: SparkSession, events_dir: str,
     stream = (_read_events_stream(spark, events_dir, max_files_per_trigger)
               .select("user_id"))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
+    def sink(bdf: DataFrame, batch_id: int) -> None:
         batch_sketch = cms_sketch(bdf, "user_id", width, depth)
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+        base = state.read(bdf.sparkSession)
         out = (batch_sketch if base is None
                else cms_merge(base, batch_sketch))
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("append")
      .foreachBatch(sink)
@@ -357,18 +340,14 @@ def stream_quantile_values(spark: SparkSession, events_dir: str,
     stream = (_read_events_stream(spark, events_dir, max_files_per_trigger)
               .select("event_id", "value"))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
+    def sink(bdf: DataFrame, batch_id: int) -> None:
         batch_sketch = quantile_sketch(bdf, "value", F.col("event_id"), k)
-        # explicit existence check, NOT try/except (see stream_kmv note:
-        # a silently reset sketch is a plausible-but-wrong estimate)
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+        base = state.read(bdf.sparkSession)
         out = (batch_sketch if base is None
                else quantile_sketch_merge(base, batch_sketch, k=k))
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("append")
      .foreachBatch(sink)
@@ -400,17 +379,15 @@ def stream_ams_moment(spark: SparkSession, events_dir: str,
     stream = (_read_events_stream(spark, events_dir, max_files_per_trigger)
               .select("event_type", "user_id"))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
+    def sink(bdf: DataFrame, batch_id: int) -> None:
         batch_sketch = ams_sketch(bdf, "user_id", "event_type",
                                   groups, per_group)
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+        base = state.read(bdf.sparkSession)
         out = (batch_sketch if base is None
                else ams_merge(base, batch_sketch))
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("append")
      .foreachBatch(sink)

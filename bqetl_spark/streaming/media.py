@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bqetl_spark.streaming.stateutil import replace_parquet_state
+from bqetl_spark.streaming.stateutil import ParquetState
 
 
 def stream_phash_index(spark: SparkSession, media_dir: str,
@@ -40,20 +40,15 @@ def stream_phash_index(spark: SparkSession, media_dir: str,
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(media_dir))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
+    def sink(bdf: DataFrame, batch_id: int) -> None:
         batch_hashes = image_phash(bdf, scale_bits=scale_bits)
-        # explicit existence check, NOT try/except-Exception: a corrupt
-        # index must FAIL the batch, not silently restart accumulation
-        # (the stream_kmv code-review-r6 lesson)
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+        base = state.read(bdf.sparkSession)
         out = (batch_hashes if base is None
                else base.unionByName(batch_hashes)
                .dropDuplicates(["media_id"]))
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("append")
      .foreachBatch(sink)
@@ -84,20 +79,15 @@ def stream_video_index(spark: SparkSession, media_dir: str,
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(media_dir))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
+    def sink(bdf: DataFrame, batch_id: int) -> None:
         batch_hashes = video_frame_phash(bdf, scale_bits=scale_bits)
-        # explicit existence check, NOT try/except-Exception (the
-        # stream_kmv code-review-r6 lesson: a corrupt index must FAIL
-        # the batch, not silently restart accumulation)
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+        base = state.read(bdf.sparkSession)
         out = (batch_hashes if base is None
                else base.unionByName(batch_hashes)
                .dropDuplicates(["media_id", "frame_idx"]))
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("append")
      .foreachBatch(sink)
@@ -130,20 +120,15 @@ def stream_audio_index(spark: SparkSession, media_dir: str,
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(media_dir))
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        import os
+    state = ParquetState(target_path)
 
-        sp = bdf.sparkSession
+    def sink(bdf: DataFrame, batch_id: int) -> None:
         batch_lm = audio_landmarks(bdf, fanout_dt=fanout_dt)
-        # explicit existence check, NOT try/except-Exception (the
-        # stream_kmv code-review-r6 lesson: a corrupt index must FAIL
-        # the batch, not silently restart accumulation)
-        base = (sp.read.parquet(target_path)
-                if os.path.isdir(target_path) else None)
+        base = state.read(bdf.sparkSession)
         out = (batch_lm if base is None
                else base.unionByName(batch_lm)
                .dropDuplicates(["media_id", "f1", "lhash"]))
-        replace_parquet_state(out, target_path, batch_id)
+        state.write(out, batch_id)
 
     (stream.writeStream.outputMode("append")
      .foreachBatch(sink)

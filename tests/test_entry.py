@@ -101,3 +101,29 @@ def test_window_order_matches_tool():
     assert gates == want, (
         "queries() dict order does not match tools/window_order.py output "
         "— regenerate the dict or update ROUND_HEAD")
+
+
+def test_window_history_ignores_rounds_after_pin(tmp_path):
+    """The driver-window history is frozen at HISTORY_THROUGH: committing
+    a newer CORRECTNESS_r*.json must not move the queries() order."""
+    import json
+    import os
+    import shutil
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "tools"))
+    try:
+        import window_order as wo
+    finally:
+        sys.path.remove(os.path.join(repo, "tools"))
+
+    pinned = wo.gate_history()
+    for n in range(1, wo.HISTORY_THROUGH + 1):
+        src = os.path.join(repo, f"CORRECTNESS_r{n:02d}.json")
+        if os.path.exists(src):
+            shutil.copy(src, tmp_path)
+    newer = {g: {"hash_match": True} for g in pinned}
+    (tmp_path / f"CORRECTNESS_r{wo.HISTORY_THROUGH + 1:02d}.json") \
+        .write_text(json.dumps(newer))
+    assert wo.gate_history(str(tmp_path)) == pinned

@@ -409,3 +409,93 @@ def test_stream_audio_index_chop_invariant(spark, tmp_path):
         release_pinned()
         assert idx == batch_idx
         assert best == batch_best
+
+
+def _media_source(spark, kind):
+    """16 small media rows of ``kind`` (the nightly chop-invariance
+    payloads, trimmed so a 4-batch replay stays a default-tier test)."""
+    from bqetl_spark.functions import multimodal as mm
+
+    n = {"image": 64, "video": 384, "audio": 256}[kind]
+    docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
+            .filter(f"length(text) >= {n} and "
+                    f"octet_length(substring(text, 1, {n})) = {n}")
+            .orderBy("doc_id").limit(16))
+    if kind == "image":
+        return mm.attach_tiff_media(docs, "doc_id", "text", 8, 8,
+                                    rows_per_strip=2)
+    if kind == "video":
+        frame = lambda k: F.concat(
+            F.lit("P6\n8 8\n255\n").cast("binary"),
+            F.substring(F.col("text"), 96 * k + 1, 192).cast("binary"))
+        return mm.attach_media(docs, "doc_id",
+                               F.concat(frame(0), frame(1), frame(2)),
+                               kind="video", fmt="ppms")
+    import struct
+
+    header = (b"RIFF" + (36 + 256).to_bytes(4, "little") + b"WAVE"
+              + b"fmt " + (16).to_bytes(4, "little")
+              + struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+              + b"data" + (256).to_bytes(4, "little"))
+    payload = F.concat(F.lit(header),
+                       F.substring(F.col("text"), 1, 256).cast("binary"))
+    return mm.attach_media(docs, "doc_id", payload, kind="audio", fmt="wav")
+
+
+_STATE_SINKS = {
+    "stream_upsert_user_totals": ("events", None),
+    "stream_kmv_user_distinct": ("events", None),
+    "stream_hll_user_distinct": ("events", None),
+    "stream_cms_user_counts": ("events", None),
+    "stream_quantile_values": ("events", None),
+    "stream_ams_moment": ("events", None),
+    "stream_phash_index": ("media", "image"),
+    "stream_video_index": ("media", "video"),
+    "stream_audio_index": ("media", "audio"),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(_STATE_SINKS))
+def test_sink_state_schema_is_what_a_read_infers(spark, tmp_path,
+                                                monkeypatch, sink):
+    """Each foreachBatch sink reads its persisted state with the schema
+    it last wrote instead of inferring it every micro-batch. After a
+    4-batch replay that remembered schema must equal what a plain
+    ``read.parquet`` infers from the files — a merge that widens a type
+    (a decimal sum, say) would otherwise read back mistyped — and the
+    next read must fire no Spark job."""
+    from bqetl_spark.caching import release_pinned
+    from bqetl_spark.sources.parquet_source import load_events
+    from bqetl_spark.streaming import events, media, stateutil
+
+    module_name, kind = _STATE_SINKS[sink]
+    module = events if module_name == "events" else media
+    made = []
+
+    class Spy(stateutil.ParquetState):
+        def __init__(self, target_path):
+            super().__init__(target_path)
+            made.append(self)
+
+    monkeypatch.setattr(module, "ParquetState", Spy)
+    src_df = (load_events(spark, SF_DIR) if kind is None
+              else _media_source(spark, kind))
+    src = str(tmp_path / "src")
+    src_df.repartition(4).write.parquet(src)
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 4
+    target = str(tmp_path / "state")
+    getattr(module, sink)(spark, src, target, max_files_per_trigger=1)
+    release_pinned()
+
+    (state,) = made
+    assert state.last_written is not None
+    assert state.last_written[1] == spark.read.parquet(target).schema
+
+    sc = spark.sparkContext
+    sc.setJobGroup("state_read", "remembered-schema state read")
+    try:
+        again = state.read(spark)
+        assert sc.statusTracker().getJobIdsForGroup("state_read") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again.schema == state.last_written[1]

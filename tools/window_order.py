@@ -46,15 +46,25 @@ ROUND_HEAD = {
     "changed": [],
 }
 
+# The newest driver round the order is computed from. gate_history()
+# ignores CORRECTNESS_r*.json files above it, so committing a new round's
+# artifact leaves the queries() order (and its pin in tests/test_entry.py)
+# unchanged until this constant is bumped together with ROUND_HEAD and the
+# dict is regenerated (tools/regen_queries_dict.py).
+HISTORY_THROUGH = 13
 
-def gate_history(repo=REPO):
-    """gate -> newest round with a GREEN driver row (0 = never)."""
+
+def gate_history(repo=REPO, through=HISTORY_THROUGH):
+    """gate -> newest round <= ``through`` with a GREEN driver row
+    (0 = never)."""
     newest = {}
     for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
         rnd = int(m.group(1))
+        if rnd > through:
+            continue
         with open(path) as f:
             data = json.load(f)
         for gate, row in data.items():
