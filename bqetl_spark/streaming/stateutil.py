@@ -23,30 +23,6 @@ from pyspark.sql import types as T
 from bqetl_spark.sources.inferred import file_signature
 
 
-def replace_parquet_state(out: DataFrame, target_path: str,
-                          batch_id: int) -> None:
-    """Materialize ``out`` beside ``target_path`` and swap it in.
-
-    r12 optimization (guide §6/§1.2): the r6–r11 sinks wrote the merge to
-    a tmp dir and then ran a SECOND Spark job copying tmp → target
-    (read.parquet(tmp).write(target)) plus an rmtree — two full write
-    jobs per micro-batch for a bounded-size state table. The copy job
-    only existed to move bytes back under the canonical path, which a
-    filesystem rename does as a metadata operation: write tmp (the one
-    unavoidable job — it consumes the old target files), rmtree target,
-    rename tmp → target. Final state is byte-identical; per-batch Spark
-    jobs halve. The non-atomic rmtree+rename window is no worse than the
-    prior copy's overwrite window (which truncated target before
-    rewriting it); real restart tolerance comes from foreachBatch's
-    checkpointed batch ids either way, as documented on each sink.
-    """
-    tmp = target_path + f".batch{batch_id}"
-    out.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(target_path):
-        shutil.rmtree(target_path)
-    os.rename(tmp, target_path)
-
-
 def _as_nullable(dt: T.DataType) -> T.DataType:
     """``dt`` with every field, element and value nullable: the schema a
     parquet read reports for data written with schema ``dt``."""
@@ -93,6 +69,26 @@ class ParquetState:
         return spark.read.parquet(self.target_path)
 
     def write(self, out: DataFrame, batch_id: int) -> None:
-        replace_parquet_state(out, self.target_path, batch_id)
+        """Materialize ``out`` beside ``target_path`` and swap it in.
+
+        r12 optimization (guide §6/§1.2): the r6–r11 sinks wrote the merge
+        to a tmp dir and then ran a SECOND Spark job copying tmp → target
+        (read.parquet(tmp).write(target)) plus an rmtree — two full write
+        jobs per micro-batch for a bounded-size state table. The copy job
+        only existed to move bytes back under the canonical path, which a
+        filesystem rename does as a metadata operation: write tmp (the one
+        unavoidable job — it consumes the old target files), rmtree
+        target, rename tmp → target. Final state is byte-identical;
+        per-batch Spark jobs halve. The non-atomic rmtree+rename window is
+        no worse than the prior copy's overwrite window (which truncated
+        target before rewriting it); real restart tolerance comes from
+        foreachBatch's checkpointed batch ids either way, as documented on
+        each sink.
+        """
+        tmp = self.target_path + f".batch{batch_id}"
+        out.write.mode("overwrite").parquet(tmp)
+        if os.path.isdir(self.target_path):
+            shutil.rmtree(self.target_path)
+        os.rename(tmp, self.target_path)
         self.last_written = (file_signature(self.target_path),
                              _as_nullable(out.schema))

@@ -54,8 +54,8 @@ ROUND_HEAD = {
 HISTORY_THROUGH = 13
 
 
-def gate_history(repo=REPO, through=HISTORY_THROUGH):
-    """gate -> newest round <= ``through`` with a GREEN driver row
+def gate_history(repo=REPO):
+    """gate -> newest round <= HISTORY_THROUGH with a GREEN driver row
     (0 = never)."""
     newest = {}
     for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
@@ -63,7 +63,7 @@ def gate_history(repo=REPO, through=HISTORY_THROUGH):
         if not m:
             continue
         rnd = int(m.group(1))
-        if rnd > through:
+        if rnd > HISTORY_THROUGH:
             continue
         with open(path) as f:
             data = json.load(f)
